@@ -25,11 +25,12 @@ import org.json4s.jackson.JsonMethods
   * listeners attached; untraced mode attaches none. */
 object PerfBench {
 
-  final case class Op(entry: String, pass: Int, wallMs: Double,
+  final case class Op(entry: String, pass: Int, wallMs: Double, cpuMs: Double,
       setupMs: Double, probeMs: Double, rows: Long, error: String)
 
   def main(args: Array[String]): Unit = {
     implicit val fmts: Formats = DefaultFormats
+    def j(x: Any): JValue = Extraction.decompose(x)
     val plan = JsonMethods.parse(new java.io.File(args(0)))
     val workload = (plan \ "workload").extract[String]
     val cpus = (plan \ "cpus").extract[Int]
@@ -94,7 +95,7 @@ object PerfBench {
       val f = s"$checkDir/$entry.json"
       checked(entry) = f
       val w = new java.io.PrintWriter(f, "UTF-8")
-      try w.print(Json.result(df.columns.toSeq, rows)) finally w.close()
+      try w.print(JsonMethods.compact(RowJson.result(df.columns.toSeq, rows))) finally w.close()
     }
 
     var cachePeakMb = 0.0
@@ -106,6 +107,7 @@ object PerfBench {
       var err = ""
       var setupMs = 0.0
       var probeMs = 0.0
+      val c0 = cpuNs()
       val (_, opSpan) = spans.time(s"op:$e", "bench", -1, opId) { root =>
         try {
           val (df, s1) = spans.time("setup", layer, root, opId) { _ =>
@@ -122,9 +124,10 @@ object PerfBench {
           rows = n; probeMs = s2.ms
         } catch { case t: Throwable => err = t.toString.take(300) }
       }
+      val cpuMs = (cpuNs() - c0) / 1e6
       cachePeakMb = math.max(cachePeakMb, persistedMb())
       clearCaches()
-      Op(e, pass, opSpan.ms, setupMs, probeMs, rows, err)
+      Op(e, pass, opSpan.ms, cpuMs, setupMs, probeMs, rows, err)
     }
 
     /** The passes `ps`, in order; returns the ops, the wall and the
@@ -156,7 +159,7 @@ object PerfBench {
 
     // ---- traced pass: same passes, listeners on
     val catBefore = FsDelta.snapshot(catalogRoot)
-    val traceJson = if (!traced) "null" else {
+    val trace: JValue = if (!traced) JNull else {
       spans.clear()
       val tracer = new Tracer(spark)
       tracer.install()
@@ -178,26 +181,23 @@ object PerfBench {
       m("catalog.bytes_written") = FsDelta.bytesWritten(catBefore, catAfter)
       m("catalog.files_written") = FsDelta.filesWritten(catBefore, catAfter)
       tracer.uninstall()
-      s"""{"wall_s":${Json.num(twall)},"cpu_s":${Json.num(tcpu)},""" +
-        s""""ops":${tops.size},"listeners_added":$listenersTraced,""" +
-        s""""metrics":${Json.obj(m.toSeq)},"spans":${Json.spans(all)}}"""
+      JObject("wall_s" -> j(twall), "cpu_s" -> j(tcpu), "ops" -> j(tops.size),
+        "listeners_added" -> j(listenersTraced), "metrics" -> j(m.toMap),
+        "spans" -> j(all).snakizeKeys)
     }
 
-    val out =
-      s"""{"workload":"${Json.esc(workload)}","cpus":$cpus,""" +
-        s""""session_s":${Json.num(sessionS)},"setup_reps_s":${Json.arr(repS)},""" +
-        s""""first_pass_s":${Json.num(firstS)},""" +
-        s""""first_ops":${Json.ops(firstOps)},""" +
-        s""""wall_s":${Json.num(wall)},"cpu_s":${Json.num(cpu)},""" +
-        s""""cache_peak_mb":${Json.num(cachePeakMb)},""" +
-        s""""listeners_added":$listenersUntraced,""" +
-        s""""host":${ProcStat.contamination(stat0, stat1, (own1 - own0) / 1e9)},""" +
-        s""""checked":${Json.strObj(checked.toSeq)},""" +
-        s""""oracle":${Json.strObj(checked.keys.toSeq.flatMap(e =>
-          graft.SparkEntry.oracleSql.get(e).map(e -> _)))},""" +
-        s""""ops":${Json.ops(ops)},"spans":${Json.spans(opSpans)},"trace":$traceJson}"""
+    val out = JObject(
+      "workload" -> j(workload), "cpus" -> j(cpus), "session_s" -> j(sessionS),
+      "setup_reps_s" -> j(repS), "first_pass_s" -> j(firstS),
+      "first_ops" -> j(firstOps).snakizeKeys,
+      "wall_s" -> j(wall), "cpu_s" -> j(cpu), "cache_peak_mb" -> j(cachePeakMb),
+      "listeners_added" -> j(listenersUntraced),
+      "host" -> j(ProcStat.contamination(stat0, stat1, (own1 - own0) / 1e9)),
+      "checked" -> j(checked.toMap),
+      "oracle" -> j(checked.keys.flatMap(e => graft.SparkEntry.oracleSql.get(e).map(e -> _)).toMap),
+      "ops" -> j(ops).snakizeKeys, "spans" -> j(opSpans).snakizeKeys, "trace" -> trace)
     val w = new java.io.PrintWriter(outFile)
-    try w.println(out) finally w.close()
+    try w.println(JsonMethods.compact(out)) finally w.close()
     mark("result written")
     spark.stop()
   }
@@ -226,15 +226,16 @@ object ProcStat {
     Some(Sample(total - idle - steal, steal, total))
   } catch { case _: Throwable => None }
 
-  def contamination(a: Option[Sample], b: Option[Sample], ownCpuS: Double): String =
+  def contamination(a: Option[Sample], b: Option[Sample],
+      ownCpuS: Double): Option[Map[String, Double]] =
     (a, b) match {
       case (Some(x), Some(y)) if y.total > x.total =>
         val busyS = (y.busy - x.busy) / ClkTck
-        val load = ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
-        s"""{"steal_frac":${Json.num((y.steal - x.steal).toDouble / (y.total - x.total))},""" +
-          s""""other_cpu_s":${Json.num(math.max(0.0, busyS - ownCpuS))},""" +
-          s""""load1m_end":${Json.num(load)}}"""
-      case _ => "null"
+        Some(Map(
+          "steal_frac" -> (y.steal - x.steal).toDouble / (y.total - x.total),
+          "other_cpu_s" -> math.max(0.0, busyS - ownCpuS),
+          "load1m_end" -> ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage))
+      case _ => None
     }
 }
 
@@ -260,53 +261,31 @@ object FsDelta {
     written(a, b).size.toDouble
 }
 
-object Json {
-  def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-    case '\r' => "\\r"; case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
+/** A collected result as JSON: column names and rows. Decimals become
+  * strings (exact), non-finite doubles the strings "NaN"/"Infinity"; the
+  * check reads both that way. */
+object RowJson {
+  def value(x: Any): JValue = x match {
+    case null => JNull
+    case d: Double => if (d.isNaN || d.isInfinite) JString(d.toString) else JDouble(d)
+    case f: Float => value(f.toDouble)
+    case n: Long => JLong(n)
+    case n: Int => JLong(n.toLong)
+    case n: Short => JLong(n.toLong)
+    case n: Byte => JLong(n.toLong)
+    case b: Boolean => JBool(b)
+    case d: java.math.BigDecimal => JString(d.toPlainString)
+    case d: scala.math.BigDecimal => JString(d.bigDecimal.toPlainString)
+    case r: Row if r.schema != null =>
+      JObject(r.schema.fieldNames.toList.zipWithIndex.map { case (n, i) => n -> value(r.get(i)) })
+    case r: Row => JArray(r.toSeq.map(value).toList)
+    case m: scala.collection.Map[_, _] =>
+      JObject(m.toList.map { case (k, v) => String.valueOf(k) -> value(v) })
+    case xs: Iterable[_] => JArray(xs.map(value).toList)
+    case o => JString(o.toString)
   }
-  def num(d: Double): String =
-    if (d.isNaN || d.isInfinite) "null" else d.toString
-  def arr(xs: Seq[Double]): String = xs.map(num).mkString("[", ",", "]")
-  def obj(kv: Seq[(String, Double)]): String =
-    kv.map { case (k, v) => "\"" + esc(k) + "\":" + num(v) }.mkString("{", ",", "}")
-  def strObj(kv: Seq[(String, String)]): String =
-    kv.map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }
-      .mkString("{", ",", "}")
-  def ops(xs: Seq[PerfBench.Op]): String = xs.map { o =>
-    s"""{"entry":"${esc(o.entry)}","pass":${o.pass},"wall_ms":${num(o.wallMs)},""" +
-      s""""setup_ms":${num(o.setupMs)},""" +
-      s""""probe_ms":${num(o.probeMs)},"rows":${o.rows},"error":"${esc(o.error)}"}"""
-  }.mkString("[", ",", "]")
-  /** A collected result: column names and rows, values as JSON scalars,
-    * lists and objects; decimals as strings (exact), non-finite doubles
-    * as "NaN"/"Infinity" strings. */
-  def result(cols: Seq[String], rows: Seq[Row]): String = {
-    def v(x: Any): String = x match {
-      case null => "null"
-      case d: Double => if (d.isNaN || d.isInfinite) "\"" + d + "\"" else d.toString
-      case f: Float => v(f.toDouble)
-      case n @ (_: Long | _: Int | _: Short | _: Byte) => n.toString
-      case b: Boolean => b.toString
-      case d: java.math.BigDecimal => "\"" + d.toPlainString + "\""
-      case d: scala.math.BigDecimal => "\"" + d.bigDecimal.toPlainString + "\""
-      case r: Row if r.schema != null => r.schema.fieldNames.zipWithIndex
-        .map { case (n, i) => "\"" + esc(n) + "\":" + v(r.get(i)) }.mkString("{", ",", "}")
-      case r: Row => r.toSeq.map(v).mkString("[", ",", "]")
-      case m: scala.collection.Map[_, _] =>
-        m.map { case (k, x) => "\"" + esc(String.valueOf(k)) + "\":" + v(x) }.mkString("{", ",", "}")
-      case xs: Iterable[_] => xs.map(v).mkString("[", ",", "]")
-      case o => "\"" + esc(o.toString) + "\""
-    }
-    cols.map(c => "\"" + esc(c) + "\"").mkString("{\"columns\":[", ",", "],\"rows\":[") +
-      rows.map(r => (0 until r.length).map(i => v(r.get(i))).mkString("[", ",", "]"))
-        .mkString(",") + "]}"
-  }
-  def spans(xs: Seq[Span]): String = xs.map { s =>
-    s"""{"id":${s.id},"name":"${esc(s.name)}","layer":"${esc(s.layer)}",""" +
-      s""""parent":${s.parent},"op":${s.op},"start_ms":${num(s.startMs)},""" +
-      s""""end_ms":${num(s.endMs)}}"""
-  }.mkString("[", ",", "]")
+
+  def result(cols: Seq[String], rows: Seq[Row]): JValue = JObject(
+    "columns" -> JArray(cols.map(JString(_)).toList),
+    "rows" -> JArray(rows.map(r => JArray((0 until r.length).map(i => value(r.get(i))).toList)).toList))
 }

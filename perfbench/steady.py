@@ -4,11 +4,11 @@ report, for each end-to-end metric, the distance between the first and
 third quartile of its values as a share of their median.
 
 Usage (from the root of a checkout):
-  python3 perfbench/steady.py --out perfbench/runs/<name>.json [--runs 10] [--first-seed 100]
+  python3 perfbench/steady.py --out perfbench/runs/<name>.json [--first-seed 100]
 
-Runs workloads one after another (never concurrently), each run with its
-own seed, and writes every run's result line, contamination labels and
-the spreads to --out.
+Runs every workload of BENCHMARK.json ten times, one run after another
+(never concurrently), each run with its own seed, and writes every run's
+result line, contamination labels and the spreads to --out.
 """
 import argparse
 import json
@@ -22,21 +22,20 @@ sys.path.insert(0, HERE)
 
 import stats  # noqa: E402
 
+RUNS = 10
+
 
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", required=True)
-    ap.add_argument("--runs", type=int, default=10)
     ap.add_argument("--first-seed", type=int, default=100)
-    ap.add_argument("--workloads", nargs="*")
     a = ap.parse_args()
     with open("BENCHMARK.json") as f:
         bench = json.load(f)
-    names = a.workloads or [w["name"] for w in bench["workloads"]]
     out = {"benchmark": bench, "runs": {}, "spread": {}}
-    for name in names:
+    for name in (w["name"] for w in bench["workloads"]):
         runs = []
-        for i in range(a.runs):
+        for i in range(RUNS):
             seed = a.first_seed + i
             t0 = time.time()
             p = subprocess.run(

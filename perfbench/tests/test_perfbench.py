@@ -84,10 +84,10 @@ class OpSequenceTest(unittest.TestCase):
             self.assertNotEqual(workloads.passes(name, 3, 12), workloads.passes(name, 4, 12))
 
     def test_pass_count_follows_seconds_only(self):
-        self.assertEqual(len(workloads.passes("star_serving", 1, 12)), 1 + 4)
-        self.assertEqual(len(workloads.passes("index_maint", 1, 12)), 1 + 1)
+        self.assertEqual(len(workloads.passes("star_serving", 1, 15)), 1 + 3)
+        self.assertEqual(len(workloads.passes("index_maint", 1, 15)), 1 + 1)
         self.assertEqual(len(workloads.passes("index_maint", 1, 1)), 1 + 1)
-        self.assertEqual(len(workloads.passes("star_serving", 1, 60)), 1 + 20)
+        self.assertEqual(len(workloads.passes("star_serving", 1, 60)), 1 + 12)
 
 
 class StatsTest(unittest.TestCase):
@@ -123,6 +123,22 @@ class StatsTest(unittest.TestCase):
         self.assertAlmostEqual(stats.iqr_share(xs), (q3 - q1) / q2)
 
 
+class EndToEndTest(unittest.TestCase):
+    def test_metrics_take_each_entry_median_over_passes(self):
+        def op(entry, wall):
+            return dict(entry=entry, wall_ms=wall, cpu_ms=2 * wall,
+                        setup_ms=wall / 4, probe_ms=3 * wall / 4)
+        res = dict(session_s=2.0, setup_reps_s=[9.0, 1.0, 2.0], first_pass_s=10.0,
+                   ops=[op("a", 100), op("b", 300), op("a", 900), op("b", 300),
+                        op("a", 100), op("b", 500)])
+        m = run.e2e_metrics(res)
+        self.assertAlmostEqual(m["setup_s"], 2 + 2 + 10)
+        self.assertAlmostEqual(m["ops_per_s"], 2 / 0.4)  # medians 100 + 300 ms
+        self.assertAlmostEqual(m["cpu_ms_per_op"], 400)
+        self.assertAlmostEqual(m["setup_span_mean_ms"], 50)
+        self.assertAlmostEqual(m["probe_span_mean_ms"], 150)
+
+
 class CheckTest(unittest.TestCase):
     def test_compare_rules(self):
         cols, rows = ["b", "a"], [[1.0, "x"], [float("nan"), None]]
@@ -146,6 +162,13 @@ class ContractTest(unittest.TestCase):
         self.assertEqual(sorted(w["name"] for w in b["workloads"]), sorted(workloads.WORKLOADS))
         self.assertEqual({m["name"]: m["unit"] for m in b["end_to_end"]}, run.END_TO_END)
         self.assertEqual({m["name"]: m["unit"] for m in b["per_layer"]}, run.PER_LAYER)
+
+    def test_missing_per_layer_metric_fails_the_run(self):
+        m = {k: 1.0 for k in run.PER_LAYER}
+        self.assertEqual(set(run.per_layer_result(m)), set(run.PER_LAYER))
+        del m["catalog.bytes_written"]
+        with self.assertRaises(SystemExit):
+            run.per_layer_result(m)
 
 
 @unittest.skipUnless(os.environ.get("PERFBENCH_RUN_HARNESS") == "1",

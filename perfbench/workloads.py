@@ -30,10 +30,10 @@ INDEX_MAINT = {
 }
 
 WORKLOADS = {
-    "star_serving": dict(entries=STAR_SERVING, target=SERVE, sf=0.1, warm_sf=0.001, pass_s=3.0,
+    "star_serving": dict(entries=STAR_SERVING, target=SERVE, sf=0.1, warm_sf=0.001, pass_s=5.0,
                          warm=["q01_pricing_summary", "q04_star_join"]),
     "index_maint": dict(entries=INDEX_MAINT, target=INDEX, probe_layer=RETRIEVAL, sf=0.01,
-                        warm_sf=0.001, pass_s=12.0, warm=["ext126_ann_index_probe1"]),
+                        warm_sf=0.001, pass_s=15.0, warm=["ext126_ann_index_probe1"]),
 }
 
 
@@ -43,9 +43,9 @@ def passes(name, seed, seconds):
     passes is ``seconds / pass_s``, rounded, at least one. It depends on
     nothing measured, so every run of a workload times the same ops; each
     pass has its own order, so more passes average out order effects.
-    ``pass_s`` is set so that ``--seconds 12`` times four passes of
-    star_serving (about 26 s on a 4-core host) and one of index_maint
-    (about 13 s)."""
+    ``pass_s`` is set so that ``--seconds 15`` times three passes of
+    star_serving (about 20 s on a 4-core host) and one of index_maint
+    (about 14 s)."""
     w = WORKLOADS[name]
     rng = random.Random(f"{name}:{seed}")
     out = []
